@@ -55,9 +55,9 @@ SESSION_GAP_MS = 30 * 60 * 1000
 SHAPES = {
     "pit_long": dict(n_convs=300, zipf_a=1.0, max_turns=4000,
                      meta_versions=4),
-    "pit_short": dict(n_convs=700, zipf_a=2.5, max_turns=60,
+    "pit_short": dict(n_convs=6000, zipf_a=2.5, max_turns=60,
                       meta_versions=3),
-    "curate_docs": dict(n_convs=500, zipf_a=1.6, max_turns=80),
+    "curate_docs": dict(n_convs=1000, zipf_a=1.6, max_turns=80),
 }
 
 

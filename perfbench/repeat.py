@@ -1,7 +1,7 @@
 """Run the benchmark once per seed and summarise each metric.
 
     python3 perfbench/repeat.py --workload pit_short --seeds 1-10 \
-        --seconds 8 [--trace 1]
+        --seconds 10 [--trace 1]
 
 Prints, per metric, the median, the quartiles and the spread (distance
 between the first and third quartile as a share of the median), then one
@@ -38,7 +38,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 1-10")
-    ap.add_argument("--seconds", default="8")
+    ap.add_argument("--seconds", default="10")
     ap.add_argument("--trace", default="0")
     args = ap.parse_args()
     runs = []

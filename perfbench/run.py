@@ -1,6 +1,6 @@
 """Transcript feature-engine benchmark.
 
-    python3 perfbench/run.py --workload pit_short --seed 1 --seconds 8 \
+    python3 perfbench/run.py --workload pit_short --seed 1 --seconds 10 \
         --trace 0
 
 Run from the root of a checkout of the repository. It generates the
@@ -31,7 +31,6 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("pit_long", "pit_short", "curate_docs")
-SETUP_PROBES = 1                 # extra set-ups per timed run, for setup_s
 DRIVER_MEMORY = "2g"             # the engine's 48g default exceeds RAM
 # a fixed heap and young generation: with G1 free to resize them, the JVM's
 # resident set varied by a third between identical runs
@@ -145,37 +144,30 @@ def main() -> int:
     settings = {k: env[k] for k in (
         "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_LOCAL_DIRS",
         "PYTHONPATH", "PYSPARK_PYTHON")}
-    spec = {"workload": args.workload, "seconds": args.seconds,
+    spec = {"workload": args.workload, "seed": args.seed,
+            "seconds": args.seconds,
             "nproc": nproc, "in_dir": os.path.join(work, "in"),
             "work_dir": work, "inputs": inputs, "env": env,
             "extra_conf": extra_conf,
             "spans_path": os.path.join(records, os.path.basename(work)
                                        + ".spans.json")}
 
-    results = []
-    if not args.trace:
-        for i in range(SETUP_PROBES):
-            results.append(_run_worker({**spec, "mode": "probe"}, work,
-                                       f"probe{i}", deadline))
     main_res = _run_worker({**spec, "mode": "traced" if args.trace
                             else "timed"}, work, "main", deadline)
-    results.append(main_res)
-
-    # -- aggregate ------------------------------------------------------------
-    jobs = main_res["jobs"] if main_res else []
-    attempted = len(jobs) + sum(1 for r in results if r is None)
-    failed = (sum(1 for j in jobs if j["problems"])
-              + sum(1 for r in results if r is None))
-    checksums = {j["checksum"] for j in jobs if j["checksum"] is not None}
-    correct = failed == 0 and len(checksums) == 1
     if main_res is None:
-        print(f"the main worker failed; see {work}/main.log", file=sys.stderr)
+        print(f"the worker failed; see {work}/main.log", file=sys.stderr)
         return 1
 
+    # -- aggregate ------------------------------------------------------------
+    jobs = main_res["jobs"]
+    attempted = len(jobs)
+    failed = sum(1 for j in jobs if j["problems"])
+    checksums = {j["checksum"] for j in jobs if j["checksum"] is not None}
+    correct = failed == 0 and len(checksums) == 1
+
     warm = [j["wall_s"] for j in jobs if j["kind"] == "warm"]
-    setup = [r["setup_s"] for r in results if r is not None]
     end_to_end = {
-        "setup_s": (statistics.median(setup), "s"),
+        "setup_s": (main_res["setup_s"], "s"),
         "first_run_s": (main_res["first_run_s"], "s"),
         "peak_rss_mb": (main_res["peak_rss_mb"], "MiB"),
     }
@@ -192,9 +184,9 @@ def main() -> int:
         "host": {"nproc": nproc, "load_at_start": os.getloadavg(),
                  "versions": _versions()},
         "settings": {**settings, "extra_conf": extra_conf,
-                     "setup_probes": SETUP_PROBES, "closed_loop_clients": 1},
+                     "closed_loop_clients": 1},
         "inputs": {k: v for k, v in inputs.items() if k != "duplicate_ids"},
-        "gen_s": gen_s, "setup_samples": setup, "jobs": jobs,
+        "gen_s": gen_s, "jobs": jobs,
         "peak_rss_parts": main_res.get("peak_rss_parts"),
         "checksums": sorted(checksums),
         "end_to_end": {k: v[0] for k, v in end_to_end.items()},
@@ -215,7 +207,7 @@ def main() -> int:
           f"{inputs['files']} file(s); local[{nproc}], one closed-loop client")
     print(f"jobs attempted {attempted}, failed {failed}, failed_frac "
           f"{record['failed_frac']:.3f}; warm samples {len(warm)}; "
-          f"setup samples {len(setup)}; record {rec_path}")
+          f"record {rec_path}")
     if args.trace:
         metrics = {k: {"value": v, "unit": _layer_unit(k)}
                    for k, v in sorted(layers.items())}

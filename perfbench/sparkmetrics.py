@@ -20,19 +20,26 @@ _UNITS = {"ns": 1e-9, "ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0,
 _VALUE = re.compile(r"(-?\d[\d,]*(?:\.\d+)?)\s*([A-Za-z]+)?")
 _STAGE = re.compile(r"\(stage (\d+)\.\d+: task \d+\)")
 
+# Every plan node that runs Python workers: mapInPandas kernels, pandas
+# UDFs (ArrowEvalPython), plain UDFs and the grouped/windowed pandas nodes.
+PYTHON_NODES = ("MapInPandas", "MapInArrow", "PythonMapInArrow",
+                "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsIn",
+                "FlatMapCoGroupsIn", "AggregateInPandas", "ArrowAggregatePython",
+                "WindowInPandas", "ArrowWindowPython")
+PYTHON_METRICS = {
+    "spark.python.start_s": ("time to start Python workers", "sum"),
+    "spark.python.init_s": ("time to initialize Python workers", "sum"),
+    "spark.python.run_s": ("time to run Python workers", "sum"),
+    "spark.python.bytes_sent": ("data sent to Python workers", "sum"),
+    "spark.python.bytes_returned": ("data returned from Python workers",
+                                    "sum"),
+    "spark.python.tasks": ("time to run Python workers", "tasks"),
+}
 # node-name prefix -> {per-layer metric: (SQL metric name, how)}
 # "sum" adds the job total, "max" keeps the largest single task, "tasks"
 # counts the tasks of the stage that ran the node.
 NODE_METRICS = {
-    "MapInPandas": {
-        "spark.python.start_s": ("time to start Python workers", "sum"),
-        "spark.python.init_s": ("time to initialize Python workers", "sum"),
-        "spark.python.run_s": ("time to run Python workers", "sum"),
-        "spark.python.bytes_sent": ("data sent to Python workers", "sum"),
-        "spark.python.bytes_returned": ("data returned from Python workers",
-                                        "sum"),
-        "spark.python.tasks": ("time to run Python workers", "tasks"),
-    },
+    **dict.fromkeys(PYTHON_NODES, PYTHON_METRICS),
     "Exchange": {
         "spark.exchange.bytes_written": ("shuffle bytes written", "sum"),
         "spark.exchange.fetch_wait_s": ("fetch wait time", "sum"),
@@ -51,8 +58,8 @@ NODE_METRICS = {
     },
 }
 COUNTED_NODES = {"spark.exchange.count": "Exchange"}
-METRIC_NAMES = sorted([m for g in NODE_METRICS.values() for m in g]
-                      + list(COUNTED_NODES))
+METRIC_NAMES = sorted({m for g in NODE_METRICS.values() for m in g}
+                      | set(COUNTED_NODES))
 
 
 def _parse(text: str) -> tuple[float, float, int | None]:
@@ -81,10 +88,12 @@ def _stage_tasks(spark, stage_id: int) -> int:
                                   None)._1().numTasks())
 
 
-def collect(spark, exec_ids) -> dict[str, float]:
-    """Sum each per-layer Spark metric over the executions ``exec_ids``."""
+def collect(spark, exec_ids) -> tuple[dict[str, float], dict[str, float]]:
+    """Sum each per-layer Spark metric over the executions ``exec_ids``.
+    Also returns the Python run seconds per Python node type."""
     store = spark._jsparkSession.sharedState().statusStore()
     out = {m: 0.0 for m in METRIC_NAMES}
+    python_run_s: dict[str, float] = {}
     for eid in sorted(exec_ids):
         values = store.executionMetrics(eid)
         for node in _seq(store.planGraph(eid).allNodes()):
@@ -92,8 +101,8 @@ def collect(spark, exec_ids) -> dict[str, float]:
             for metric, prefix in COUNTED_NODES.items():
                 if name.startswith(prefix):
                     out[metric] += 1
-            group = next((g for p, g in NODE_METRICS.items()
-                          if name.startswith(p)), None)
+            prefix, group = next(((p, g) for p, g in NODE_METRICS.items()
+                                  if name.startswith(p)), (None, None))
             if group is None:
                 continue
             ids = {m.name(): m.accumulatorId() for m in _seq(node.metrics())}
@@ -104,12 +113,15 @@ def collect(spark, exec_ids) -> dict[str, float]:
                 total, largest, stage = _parse(values.get(acc).get())
                 if how == "sum":
                     out[metric] += total
+                    if metric == "spark.python.run_s":
+                        python_run_s[prefix] = (python_run_s.get(prefix, 0.0)
+                                                + total)
                 elif how == "max":
                     out[metric] = max(out[metric], largest / 2 ** 20)
                 else:
                     out[metric] += (_stage_tasks(spark, stage)
                                     if stage is not None else 1)
-    return out
+    return out, python_run_s
 
 
 def catalyst_seconds(df) -> float:

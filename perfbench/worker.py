@@ -3,10 +3,9 @@
 ``python3 perfbench/worker.py <spec.json> <result.json>``, started by
 ``run.py`` with the environment it prepares. Modes:
 
-- ``probe``: set up a SparkSession and exit (one ``setup_s`` sample);
-- ``timed``: set up, run the cold job and a warm-up job, then run jobs
-  back to back (a closed loop, one job at a time) until ``seconds`` have
-  passed and at least ``MIN_WARM`` have ended;
+- ``timed``: set up, run the cold job, then run jobs back to back (a
+  closed loop, one job at a time) until ``seconds`` have passed and at
+  least ``MIN_WARM`` have ended;
 - ``traced``: set up, run the cold job, the ladder, untraced and traced
   jobs, and read the per-layer metrics.
 
@@ -31,13 +30,12 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import sparkmetrics  # noqa: E402
 import workloads  # noqa: E402
-from check import check  # noqa: E402
+from check import check, reference_checksum  # noqa: E402
 
-# the jobs right after the cold one still speed up as the JVM compiles:
-# one warm-up job is left out, and rows_per_s is a median of at least two
+# rows_per_s is a median of at least this many jobs after the cold one
 MIN_WARM = 2
 # one pass left steps of a few hundred ms below the run-to-run noise
-LADDER_PASSES = 3
+LADDER_PASSES = 2
 
 
 class Tracer:
@@ -78,10 +76,11 @@ class Runner:
         self.steps = workloads.steps(self.workload, self.in_dir)
         self.is_pit = self.workload != "curate_docs"
         self.ckpt_root = os.path.join(spec["work_dir"], "ckpt")
-        self.out_dir = (os.path.join(self.ckpt_root, "pit",
-                                     workloads.PIT_OUTPUT_STAGE, "data")
+        self.out_dir = (workloads.pit_stage_data(self.ckpt_root,
+                                                 workloads.PIT_OUTPUT_STEP)
                         if self.is_pit
                         else os.path.join(spec["work_dir"], "out"))
+        self.expected = reference_checksum(self.workload, spec["seed"])
         self.jobs: list[dict] = []
         self.peak_rss_mb = 0.0
         self.peak_rss_parts: dict[str, float] = {}
@@ -109,7 +108,8 @@ class Runner:
                 self._job()
             rec["wall_s"] = time.perf_counter() - t0
             rec["problems"], rec["checksum"] = check(
-                self.workload, self.out_dir, self.in_dir, self.spec["inputs"])
+                self.workload, self.out_dir, self.in_dir, self.spec["inputs"],
+                self.expected)
         except Exception as e:                  # a failed job is a sample
             rec["wall_s"] = time.perf_counter() - t0
             rec["problems"] = [f"{type(e).__name__}: {e}"[:500]]
@@ -129,20 +129,35 @@ class Runner:
         return time.perf_counter() - t0
 
     def ladder(self, tracer: Tracer) -> dict:
-        """Per-step seconds: the median time to force each cumulative
-        prefix of the pipeline minus that of the prefix before it."""
+        """Per-step seconds, each the median over ``LADDER_PASSES``.
+
+        ``curate_docs``: each cumulative prefix of the chain is forced, and
+        a step costs its prefix's time minus the previous prefix's.
+        ``pit_*``: each operator is forced on the previous stage's
+        committed output, as ``CheckpointedJob`` runs it but without the
+        parquet write; the first stage also scans, so the bare scan's time
+        is taken off it. Either way ``ladder.full_s`` is the sum of the
+        steps."""
         times: dict[str, list[float]] = {name: [] for name, _ in self.steps}
         for _ in range(LADDER_PASSES):
-            for k, (name, _) in enumerate(self.steps):
+            for k, (name, fn) in enumerate(self.steps):
                 with tracer.span(f"rung:{name}"):
-                    times[name].append(self.force(
-                        workloads.chain(self.spark, self.steps[:k + 1])))
+                    if self.is_pit and k > 1:
+                        df = fn(self.spark, self.spark.read.parquet(
+                            workloads.pit_stage_data(self.ckpt_root,
+                                                     self.steps[k - 1][0])))
+                    else:
+                        df = workloads.chain(self.spark, self.steps[:k + 1])
+                    times[name].append(self.force(df))
                 self.spark.catalog.clearCache()
         out, prev = {}, 0.0
-        for name, ts in times.items():
+        for k, (name, ts) in enumerate(times.items()):
             t = statistics.median(ts)
-            out[name], prev = t - prev, t
-        out["ladder.full_s"] = prev
+            if self.is_pit and k > 1:
+                out[name] = t
+            else:
+                out[name], prev = t - prev, t
+        out["ladder.full_s"] = sum(out.values())
         return out
 
 
@@ -184,16 +199,19 @@ def traced_run(r: Runner, tracer: Tracer) -> dict:
         before = sparkmetrics.execution_ids(spark)
         traced.append(r.job("traced", tracer)["wall_s"])
         if i == 0:
-            m.update(sparkmetrics.collect(
-                spark, sparkmetrics.execution_ids(spark) - before))
+            spark_metrics, python_run_s = sparkmetrics.collect(
+                spark, sparkmetrics.execution_ids(spark) - before)
+            m.update(spark_metrics)
         untraced.append(r.job("untraced")["wall_s"])
     if r.is_pit:
         # the manifests are the untraced job's, so every stage resumes
         job = workloads.pit_job(spark, r.in_dir, r.ckpt_root)
+        manifests = [job.manifest(st) for st in job.lineage()]
         m["jobs.checkpoint.bytes_written"] = float(sum(
-            p["bytes"] for st in job.lineage()
-            for p in job.manifest(st)["partitions"]))
-        m["jobs.checkpoint.write_s"] = (statistics.median(untraced)
+            p["bytes"] for mf in manifests for p in mf["partitions"]))
+        # the stages' own wall time (build, compute, write) minus the same
+        # operators forced without a write
+        m["jobs.checkpoint.write_s"] = (sum(mf["wall_s"] for mf in manifests)
                                         - m["ladder.full_s"])
         t0 = time.perf_counter()
         with tracer.span("jobs.checkpoint.resume"):
@@ -207,8 +225,10 @@ def traced_run(r: Runner, tracer: Tracer) -> dict:
                                     / m["trace.untraced_rows_per_s"])
 
     if r.is_pit:
+        # the kernel window is the backfill's only mapInPandas
         m["window_agg.kernel_s_per_group"] = (
-            m["spark.python.run_s"] / r.spec["inputs"]["conversations"])
+            python_run_s.get("MapInPandas", 0.0)
+            / r.spec["inputs"]["conversations"])
     else:
         with tracer.span("pipeline.dedup.lsh_useful"):
             cand = workloads.lsh_candidates(
@@ -232,23 +252,21 @@ def main(spec_path: str, result_path: str) -> None:
     ready = time.time()
     res = {"setup_s": ready - spec["spawned_at"],
            "session.start_s": ready - t_imported}
-    if spec["mode"] != "probe":
-        r = Runner(spec, spark)
-        tracer = Tracer()
-        res["first_run_s"] = r.job("cold")["wall_s"]
-        if spec["mode"] == "timed":
-            r.job("warmup")
-            deadline = time.perf_counter() + spec["seconds"]
-            while (time.perf_counter() < deadline
-                   or sum(j["kind"] == "warm" for j in r.jobs) < MIN_WARM):
-                r.job("warm")
-        else:
-            res["layers"] = traced_run(r, tracer)
-            with open(spec["spans_path"], "w") as f:
-                json.dump(tracer.spans, f)
-        res["jobs"] = r.jobs
-        res["peak_rss_mb"] = r.peak_rss_mb
-        res["peak_rss_parts"] = r.peak_rss_parts
+    r = Runner(spec, spark)
+    tracer = Tracer()
+    res["first_run_s"] = r.job("cold")["wall_s"]
+    if spec["mode"] == "timed":
+        deadline = time.perf_counter() + spec["seconds"]
+        while (time.perf_counter() < deadline
+               or sum(j["kind"] == "warm" for j in r.jobs) < MIN_WARM):
+            r.job("warm")
+    else:
+        res["layers"] = traced_run(r, tracer)
+        with open(spec["spans_path"], "w") as f:
+            json.dump(tracer.spans, f)
+    res["jobs"] = r.jobs
+    res["peak_rss_mb"] = r.peak_rss_mb
+    res["peak_rss_parts"] = r.peak_rss_parts
     with open(result_path, "w") as f:
         json.dump(res, f)
 

@@ -26,6 +26,7 @@ from openmldb_spark.pipeline.text import (
     append_lang_quality, gopher_quality, scrub_pii)
 
 TEN_MIN_MS = 600_000
+MAXSIZE = 50
 SESSION_GAP_MS = 30 * 60 * 1000
 NEAR_DUP_JACCARD = 0.8
 
@@ -55,7 +56,7 @@ def _native_window(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 def _kernel_window(spark: SparkSession, df: DataFrame) -> DataFrame:
     spec = WindowSpecFE(["conv_id"], "ts", frame="range", start=TEN_MIN_MS,
-                        end=0, maxsize=50, tiebreak=("turn_idx",))
+                        end=0, maxsize=MAXSIZE, tiebreak=("turn_idx",))
     return window_agg(df, spec, [
         Agg("n_user_10m", "count_where", "turn_idx", cond="role = 'user'"),
         Agg("n_tool_10m", "count_where", "turn_idx",
@@ -150,6 +151,16 @@ def chain(spark: SparkSession, step_list, wrap=None) -> DataFrame:
     return df
 
 
+def pit_stage(step: str) -> str:
+    """The ``CheckpointedJob`` stage an operator step runs as."""
+    return step.split(".")[-1].removesuffix("_s")
+
+
+def pit_stage_data(root: str, step: str) -> str:
+    """Where ``pit_job(.., root)`` commits the output of ``step``."""
+    return os.path.join(root, "pit", pit_stage(step), "data")
+
+
 def _first_stage(scan, sess, spark: SparkSession) -> DataFrame:
     return sess(spark, scan(spark))
 
@@ -163,7 +174,7 @@ def pit_job(spark: SparkSession, in_dir: str, root: str,
     job = CheckpointedJob(spark, root, "pit")
     prev: list[str] = []
     for i, (name, fn) in enumerate(ops):
-        stage = name.split(".")[-1].removesuffix("_s")
+        stage = pit_stage(name)
         if i == 0:
             job.stage(stage, functools.partial(
                 _first_stage, w("ladder.scan_s", scan), w(name, fn)),
@@ -176,4 +187,4 @@ def pit_job(spark: SparkSession, in_dir: str, root: str,
     return job
 
 
-PIT_OUTPUT_STAGE = "backfill"
+PIT_OUTPUT_STEP = "operators.backfill_s"
