@@ -30,11 +30,14 @@ Execution strategy (mirrors the reference's repartition→sortWithinPartitions
   every agg compiles to a Catalyst expression over
   ``Window.partitionBy(keys).orderBy(ts_ms).rowsBetween/rangeBetween`` —
   whole-stage-codegen'd, zero Python.
-- **kernel**: otherwise, one Arrow ``applyInPandas`` per (key[, salt])
-  group. The kernel is vectorized: frame bounds for *all* rows of a group
-  are computed with ``np.searchsorted`` on the sorted int64 ts array;
-  sum/count/avg/min/max(_where) read prefix-sum / sparse-table structures
-  (O(n log n) per group, no per-row Python for the numeric aggs).
+- **kernel**: otherwise, one ``mapInPandas`` stage over a hash
+  repartition by (key[, salt]) that AQE sizes. The kernel runs once per
+  Arrow batch over every complete key group in it (a *segment* per
+  group) and is vectorized over the whole batch: frame bounds for all
+  rows come from ``np.searchsorted`` on a composite (group, ord) int64
+  key, so no bound crosses a group; sum/count/avg/min/max(_where) read
+  batch-wide prefix-sum / sparse-table structures (O(n log n) per batch,
+  no per-row Python for the numeric aggs).
 
 Peer visibility at duplicate ts: OpenMLDB's buffer holds only
 already-iterated rows, so a row does not see later-sorted rows with the
@@ -425,17 +428,17 @@ def _cate_fmt_for(src_type: str | None):
 def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
                  passthrough: list[str], dtypes: dict[str, str],
                  cond_cols: dict[str, str],
-                 src_types: dict[str, str] | None = None,
-                 presorted: bool = False):
-    """Build the applyInPandas kernel. Everything the kernel needs is
-    captured by value (plain python objects) — no Spark objects.
-
-    ``presorted=True`` skips the per-group mergesort: the partition
-    runner feeds groups already ordered by
-    ``sortWithinPartitions(*group_keys, _ORD, _SIDE, *tiebreak)`` —
-    exactly the kernel's sort key — and the per-group ``sort_values``
-    was the single largest constant-factor cost at many-small-groups
-    scale (profiled: 2.3s of a 4.3s 1500-group run, VERDICT r2 #9)."""
+                 src_types: dict[str, str] | None = None):
+    """Build the segment kernel ``kernel(pdf, starts)``. ``pdf`` holds one
+    or more complete key groups, each contiguous and ordered by
+    ``(_ORD, _SIDE, *tiebreak)`` (the partition runner's
+    ``sortWithinPartitions`` key); ``starts`` are the groups' first-row
+    offsets. One call computes every group's frames: searchsorted bounds
+    run on a composite (group, ord) key, ROWS slots / maxsize / lag are
+    floored at the row's group start, and the prefix sums, sparse tables
+    and sliding states stay batch-wide because their bounds remain
+    monotone across groups. Everything the kernel needs is captured by
+    value (plain python objects) — no Spark objects."""
     frame = spec.frame
     start, end = int(spec.start), int(spec.end)
     open_start = spec.open_start
@@ -445,7 +448,6 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
     inst_not = spec.instance_not_in_window
     peer_sql = spec.peer == "sql"
     has_union = inst_not  # mask to union rows only when instance_not_in_window
-    tiebreak = list(spec.tiebreak)
     agg_specs = [(a.name, a.fn, a.col, a.cond, a.n, a.cate, a.n_col,
                   a.cond_l, a.cond_r)
                  for a in aggs]
@@ -454,17 +456,28 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
                     for a in aggs if a.fn in _SPLIT_FNS}
     src_types = src_types or {}
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not presorted:
-            pdf = pdf.sort_values([_ORD, _SIDE] + tiebreak,
-                                  kind="mergesort").reset_index(drop=True)
+    def kernel(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         m = len(pdf)
         ts = pdf[_ORD].to_numpy(np.int64)
         side = pdf[_SIDE].to_numpy(np.int64)
         emit = pdf[_EMIT].to_numpy(np.int64) == 1
         idx = np.arange(m)
+        # segments: g0 = each row's group start. The search key shifts
+        # every group's ords onto its own disjoint int64 range; a batch
+        # whose shifted keys would overflow int64 is split, not wrapped
+        cnt = np.diff(starts, append=m)
+        g0 = np.repeat(starts, cnt)
+        first, last = ts[starts], ts[starts + cnt - 1]
+        if len(starts) > 1 and (last.astype(float) - first).sum() >= 2.0**62:
+            h = starts[len(starts) // 2]
+            return pd.concat([kernel(pdf.iloc[:h], starts[starts < h]),
+                              kernel(pdf.iloc[h:], starts[starts >= h] - h)],
+                             ignore_index=True)
+        width = last - first + 1
+        key = ts if len(starts) == 1 else \
+            ts - ts[g0] + np.repeat(np.cumsum(width) - width, cnt)
 
-        # ---- base frame bounds [lo, hi] (inclusive, indices into sorted grp)
+        # ---- base frame bounds [lo, hi] (inclusive, indices into the batch)
         if frame == "rows":
             # ROWS frames count slots over the BUFFERED rows only
             # (reference: HistoryWindow buffers exclude same-current-time
@@ -474,18 +487,17 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
             # test_window_union.yaml#13). Slot bounds are resolved below,
             # after the visibility mask/cumsum exist; here only the hard
             # position bounds apply.
-            lo = np.zeros(m, dtype=np.int64)
+            lo = g0
             hi = idx.copy()
         else:
-            q_lo = ts - start
-            lo = np.searchsorted(ts, q_lo, side="right" if open_start else "left")
-            hi = np.searchsorted(ts, ts - end, side="right") - 1
-        np.clip(lo, 0, m, out=lo)
+            lo = np.maximum(g0, np.searchsorted(
+                key, key - start, side="right" if open_start else "left"))
+            hi = np.searchsorted(key, key - end, side="right") - 1
         if end == 0 and not peer_sql:
             hi = np.minimum(hi, idx)          # stream peers: only seen rows
-        hi = np.minimum(hi, m - 1)
         # frame decomposition: contiguous [lo, chi] + optional self row
-        first_peer = np.searchsorted(ts, ts, side="left") if ex_time else None
+        first_peer = np.searchsorted(key, key, side="left") if ex_time \
+            else None
         if ex_time and end == 0:
             chi = np.minimum(hi, first_peer - 1)
             self_in = not ex_row
@@ -623,10 +635,11 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
                 for i in range(m):
                     if not emit[i]:
                         continue
-                    l, h = int(lo[i]), int(chi[i])
-                    if h < l:
-                        l, h = 0, -1
-                    if l < cl or h < ch_:
+                    # empty frame -> (l, l - 1): relative to the row,
+                    # so the slide never restarts at row 0 of the batch
+                    l = int(lo[i])
+                    h = max(int(chi[i]), l - 1)
+                    if l < cl or h < ch_ or l > ch_:   # rebuild
                         cnt, cl, ch_ = {}, l, l - 1
                     while ch_ < h:
                         ch_ += 1
@@ -689,9 +702,8 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
                 for i in range(m):
                     if not emit[i]:
                         continue
-                    l, h = int(lo[i]), int(chi[i])
-                    if h < l:
-                        l, h = 0, -1
+                    l = int(lo[i])
+                    h = max(int(chi[i]), l - 1)  # empty: (l, l - 1)
                     state.slide(l, h)
                     res_l[i] = state.result(i if self_add else None)
                 out[name] = res_l
@@ -707,16 +719,11 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
                 if nn_ == 0:      # at(col, 0) = the current row's value
                     out[name] = np.asarray(arr[col], dtype=object)
                     continue
-                elig = mask if has_union else np.ones(m, dtype=bool)
-                cum_e = np.cumsum(elig.astype(np.int64))
-                elig_idx = np.flatnonzero(elig)
                 upper = (first_peer - 1) if ex_time else (idx - 1)
-                upper_cnt = np.where(
-                    upper >= 0, cum_e[np.clip(upper, 0, m - 1)], 0)
-                pos = upper_cnt - nn_
-                valid = pos >= 0
+                pos = cum[upper + 1] - nn_       # buffered-row rank
+                valid = pos >= cum[g0]           # ... inside the group
                 src = np.zeros(m, dtype=np.int64)
-                src[valid] = elig_idx[pos[valid]]
+                src[valid] = np.flatnonzero(mask)[pos[valid]]
                 vraw = np.asarray(arr[col], dtype=object)
                 out[name] = np.where(valid, vraw[src], None)
                 continue
@@ -797,10 +804,9 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
                 for i in range(m):
                     if not emit[i]:
                         continue
-                    l, h = int(lo[i]), int(chi[i])
-                    if h < l:
-                        l, h = 0, -1
-                    if l < cl or h < ch_:      # non-monotone: rebuild
+                    l = int(lo[i])
+                    h = max(int(chi[i]), l - 1)  # empty: (l, l - 1)
+                    if l < cl or h < ch_ or l > ch_:   # rebuild
                         buf, cl, ch_ = [], l, l - 1
                     while ch_ < h:
                         ch_ += 1
@@ -890,9 +896,8 @@ def _make_kernel(spec: WindowSpecFE, aggs: list[Agg], out_cols: list[str],
             for i in range(m):
                 if not emit[i]:
                     continue
-                l, h = int(lo[i]), int(chi[i])
-                if h < l:
-                    l, h = 0, -1
+                l = int(lo[i])
+                h = max(int(chi[i]), l - 1)      # empty: (l, l - 1)
                 state.slide(l, h)
                 if narr is not None:
                     nv = narr[i]
@@ -1088,7 +1093,10 @@ class _SlidingMultiset:
         self.catsum.clear()
 
     def slide(self, l, h):
-        if l < self.lo or h < self.hi:
+        # rebuild on a non-monotone step, or when the new frame is
+        # disjoint from the old one (a new group): clearing is cheaper
+        # than evicting every row, and skipped rows are never added
+        if l < self.lo or h < self.hi or l > self.hi:
             self._clear()
             self.lo, self.hi = l, l - 1
         for j in range(self.hi + 1, h + 1):
@@ -1520,21 +1528,21 @@ def _kernel_exec(df: DataFrame, spec: WindowSpecFE, aggs: list[Agg],
                       for a in aggs
                       if a.cate and a.cate in in_schema.names})
     kernel = _make_kernel(spec, aggs, [a.name for a in aggs], passthrough,
-                          dtypes, cond_cols, src_types,
-                          presorted=True)
+                          dtypes, cond_cols, src_types)
     sel_cols = list(dict.fromkeys(
         passthrough + [_ORD, _SIDE, _EMIT] + group_keys +
         [c for c in spec.tiebreak] + list(cond_cols.values())))
     # partition-level iteration with group-change detection — the
     # reference's execution shape (WindowAggPlan.windowAggIter,
-    # WindowAggPlan.scala:501-558): ONE Arrow stream per partition, a
-    # plain Python call per key group. groupBy().applyInPandas pays a
-    # per-GROUP Arrow exchange, which dominates when keys are many and
-    # small (millions of conv_ids at corpus scale).
-    shuffle_n = int(allr.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
+    # WindowAggPlan.scala:501-558): ONE Arrow stream per partition, one
+    # kernel call per Arrow batch over all its key groups.
+    # groupBy().applyInPandas pays a per-GROUP Arrow exchange, which
+    # dominates when keys are many and small (millions of conv_ids at
+    # corpus scale). The repartition carries no count, so AQE can
+    # coalesce the stage (each Python task has a fixed start-up cost);
+    # with AQE off it is spark.sql.shuffle.partitions wide.
     res = (allr.select(*sel_cols)
-               .repartition(shuffle_n, *group_keys)
+               .repartition(*group_keys)
                .sortWithinPartitions(*group_keys, _ORD, _SIDE,
                                      *spec.tiebreak)
                .mapInPandas(_partition_runner(kernel, group_keys),
@@ -1542,35 +1550,20 @@ def _kernel_exec(df: DataFrame, spec: WindowSpecFE, aggs: list[Agg],
     return res
 
 
-def _partition_runner(kernel, group_keys: list[str],
-                      out_batch_rows: int = 32768):
-    """Wrap a per-group kernel into a per-partition Arrow iterator:
-    batches are re-segmented on group-key changes (rows of one key are
-    contiguous after repartition+sortWithinPartitions); a group spanning
-    batch boundaries is buffered until its last row arrives — memory is
-    one group + one batch, the same bound applyInPandas has.
-
-    Group RESULTS are accumulated and emitted as ~``out_batch_rows``-row
-    frames: yielding one Arrow batch per key group (many tiny groups at
-    corpus scale) made Arrow framing, not the kernel, the dominant cost
-    (VERDICT r2 next #9)."""
+def _partition_runner(kernel, group_keys: list[str]):
+    """Wrap the segment kernel into a per-partition Arrow iterator: ONE
+    kernel call per Arrow batch, over every complete key group in it
+    (rows of one key are contiguous after repartition +
+    sortWithinPartitions). Group starts are found with numpy; the
+    trailing group may continue in the next batch, so it is held back
+    until a key change or the end of the partition closes it — memory
+    is one group + one batch, the same bound applyInPandas has."""
 
     def run(batches):
         buf = None
-        out: list[pd.DataFrame] = []
-        n_out = 0
-
-        def flush():
-            nonlocal out, n_out
-            if out:
-                yield (out[0] if len(out) == 1
-                       else pd.concat(out, ignore_index=True))
-                out, n_out = [], 0
-
         for pdf in batches:
             if buf is not None:
                 pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
             if len(pdf) == 0:
                 continue
             # group boundaries via numpy (pandas groupby paid ~1ms of
@@ -1587,19 +1580,11 @@ def _partition_runner(kernel, group_keys: list[str],
                                                    & pd.isna(prev))
                 change[1:] |= ~eq
             starts = np.flatnonzero(change)
-            # hold the (possibly incomplete) trailing group
             buf = pdf.iloc[starts[-1]:]
-            for si, sj in zip(starts[:-1], starts[1:]):
-                r = kernel(pdf.iloc[si:sj].reset_index(drop=True))
-                out.append(r)
-                n_out += len(r)
-                if n_out >= out_batch_rows:
-                    yield from flush()
+            if len(starts) > 1:
+                yield kernel(pdf.iloc[:starts[-1]], starts[:-1])
         if buf is not None and len(buf):
-            r = kernel(buf.reset_index(drop=True))
-            out.append(r)
-            n_out += len(r)
-        yield from flush()
+            yield kernel(buf, np.zeros(1, dtype=np.int64))
 
     return run
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -110,7 +111,7 @@ def test_stream_peer_range_window_takes_kernel(spark):
     # frame one by one) are NOT expressible with Catalyst rangeBetween,
     # so the default spec MUST route to the Arrow kernel.
     from openmldb_spark.operators.window_agg import (
-        Agg, WindowSpecFE, window_agg)
+        Agg, SkewConfig, WindowSpecFE, window_agg)
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     spec = WindowSpecFE(["user_id"], "ts", frame="range",
@@ -120,6 +121,19 @@ def test_stream_peer_range_window_takes_kernel(spark):
     p = plan_of(out)
     assert "MapInPandas" in p, p
     assert "FlatMapGroupsInPandas" not in p, p
+    # the kernel stage's exchange carries no partition count, so AQE can
+    # coalesce it (a fixed count pins one Python task per partition) —
+    # and it stays the operator's only hash exchange
+    assert "REPARTITION_BY_NUM" not in p, p
+    assert p.count("REPARTITION_BY_COL") == 1, p
+    assert p.count("hashpartitioning(") == 1, p
+    # the skew-salted path partitions by (keys, salt part)
+    salted = plan_of(window_agg(ev, spec, [Agg("c", "count", "value")],
+                                skew=SkewConfig(parts=2, min_rows=10)))
+    assert "REPARTITION_BY_NUM" not in salted, salted
+    assert len(re.findall(r"hashpartitioning\(user_id#\d+L?, "
+                          r"__omls_part#\d+, \d+\), REPARTITION_BY_COL",
+                          salted)) == 1, salted
 
 
 def test_minhash_band_join_is_equi(spark):

@@ -329,3 +329,47 @@ def test_lead_native_label_construction(spark):
     with pytest.raises(ValueError, match="lead is native-only"):
         run(spark, micro_pdf(), spec,
             [Agg("nxt", "lead", "c4", n=1)], union_pdf=micro_pdf())
+
+
+@pytest.mark.parametrize("kw", [
+    {"frame": "range", "start": 5000, "maxsize": 3},
+    {"frame": "range", "start": 5000, "exclude_current_row": True},
+    {"frame": "rows", "start": 3, "exclude_current_time": True},
+])
+def test_kernel_groups_straddle_arrow_batches(spark, kw):
+    """7-row Arrow batches split key groups across batches, a NULL key
+    forms its own group, and 16 uncoalesced shuffle partitions for 4
+    keys leave some kernel partitions empty: output == oracle."""
+    rng = np.random.default_rng(23)
+    n = 90
+    pdf = pd.DataFrame({
+        "k": rng.choice(np.array(["a", "b", "c", None], dtype=object), n),
+        "tb": np.arange(n),
+        "v": np.where(rng.random(n) < 0.1, np.nan,
+                      rng.integers(0, 5, n).astype(float)),
+        "ts": pd.to_datetime(
+            BASE + rng.integers(0, 20_000, n).astype(np.int64), unit="ms"),
+    })
+    aggs = [Agg("cnt", "count", "v"), Agg("sm", "sum", "v"),
+            Agg("dc", "distinct_count", "v"), Agg("fv", "first_value", "v"),
+            Agg("lg", "lag", "v", n=2)]
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+            "spark.sql.shuffle.partitions": "16",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        spec = WindowSpecFE(["k"], "ts", tiebreak=["tb"], **kw)
+        got = window_agg(spark.createDataFrame(pdf), spec, aggs).toPandas()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    exp = oracle_window(
+        pdf, ["k"], "ts", tiebreak=["tb"],
+        aggs=[("cnt", "count", "v"), ("sm", "sum", "v"),
+              ("dc", "distinct_count", "v"), ("fv", "first_value", "v"),
+              ("lg", "lag", "v", 2)], **kw)
+    assert got["k"].isna().sum() == (pdf["k"].isna()).sum() > 0
+    assert_pdf_allclose(got, exp, sort_by=["tb"],
+                        float_cols=["sm", "fv", "lg"])

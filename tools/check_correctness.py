@@ -160,7 +160,7 @@ def main():
         print(f"FATAL: gate incomplete — missing {missing}, "
               f"double-printed {dupes}")
         n_fail += max(1, len(missing) + len(dupes))
-    print(f"\n{n_pass} pass, {n_fail} fail")
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_skip} skip")
     sys.exit(1 if n_fail else 0)
 
 
