@@ -1361,39 +1361,41 @@ def _lang_qs_sql() -> tuple[str, str]:
     strictly-greater wins, first language in _LANG_MARKERS order wins
     ties; non-ASCII-heavy -> 'other'; all-zero hits -> 'unknown'."""
     from openmldb_spark.pipeline.text import _LANG_MARKERS
-    low = "regexp_split_to_array(regexp_replace(lower(text), '^\\s+|\\s+$', '', 'g'), '\\s+')"
+    # NULL text scores like '' (the kernel fillna("")s)
+    t = "COALESCE(text, '')"
+    low = f"regexp_split_to_array(regexp_replace(lower({t}), '^\\s+|\\s+$', '', 'g'), '\\s+')"
     hits = {}
     for lg, markers in _LANG_MARKERS.items():
         lst = "[" + ", ".join(f"'{w}'" for w in markers) + "]"
         hits[lg] = f"len(list_filter({low}, x -> list_contains({lst}, x)))"
     langs = list(_LANG_MARKERS)
-    na = ("(length(text) - length(regexp_replace(text, "
+    na = (f"(length({t}) - length(regexp_replace({t}, "
           "'[^\\x00-\\x7F]', '', 'g')))")
     cases = []
     for i, lg in enumerate(langs[:-1]):
         conds = " AND ".join(f"{hits[lg]} >= {hits[o]}"
                              for o in langs[i + 1:])
         cases.append(f"WHEN {conds} THEN '{lg}'")
-    lang_sql = (f"CASE WHEN {na} * 3 > length(text) THEN 'other' "
+    lang_sql = (f"CASE WHEN {na} * 3 > length({t}) THEN 'other' "
                 f"WHEN greatest({', '.join(hits.values())}) = 0 "
                 f"THEN 'unknown' " + " ".join(cases)
                 + f" ELSE '{langs[-1]}' END")
 
-    ntok = ("CASE WHEN length(regexp_replace(text, '^\\s+|\\s+$', '', 'g')) = 0 THEN 0 "
-            "ELSE len(regexp_split_to_array(regexp_replace(text, '^\\s+|\\s+$', '', 'g'), '\\s+')) END")
-    n_alpha = ("(length(text) - length(regexp_replace(text, "
+    ntok = (f"CASE WHEN length(regexp_replace({t}, '^\\s+|\\s+$', '', 'g')) = 0 THEN 0 "
+            f"ELSE len(regexp_split_to_array(regexp_replace({t}, '^\\s+|\\s+$', '', 'g'), '\\s+')) END")
+    n_alpha = (f"(length({t}) - length(regexp_replace({t}, "
                "'[A-Za-z]', '', 'g')))")
-    n_punct = ("(length(text) - length(regexp_replace(text, "
+    n_punct = (f"(length({t}) - length(regexp_replace({t}, "
                "'[.,!?;:''\"()\\[\\]{}-]', '', 'g')))")
     sw_hits = (f"len(list_filter({low}, "
                f"x -> list_contains({_SW_SQL}, x)))")
     awl = (f"(CASE WHEN {ntok} > 0 THEN CAST({n_alpha} AS DOUBLE) "
            f"/ {ntok} ELSE 0.0 END)")
-    pr = ("(CASE WHEN length(text) > 0 THEN CAST(" + n_punct
-          + " AS DOUBLE) / length(text) ELSE 0.0 END)")
+    pr = (f"(CASE WHEN length({t}) > 0 THEN CAST(" + n_punct
+          + f" AS DOUBLE) / length({t}) ELSE 0.0 END)")
     swr = (f"(CASE WHEN {ntok} > 0 THEN CAST({sw_hits} AS DOUBLE) "
            f"/ {ntok} ELSE 0.0 END)")
-    qs_sql = (f"ROUND((least(length(text) / 500.0, 1.0) "
+    qs_sql = (f"ROUND((least(length({t}) / 500.0, 1.0) "
               f"+ CASE WHEN {awl} >= 3.0 AND {awl} <= 10.0 "
               f"THEN 1.0 ELSE 0.5 END "
               f"+ CASE WHEN {pr} < 0.1 THEN 1.0 ELSE 0.5 END "

@@ -25,6 +25,7 @@ Arrow-vectorized ``applyInPandas`` / ``mapInPandas`` kernels (no per-row
 Python UDFs anywhere in the engine).
 """
 
+from openmldb_spark._zipstamp import install_on_worker
 from openmldb_spark.session import get_spark  # noqa: F401
 from openmldb_spark.operators.last_join import last_join  # noqa: F401
 from openmldb_spark.operators.window_agg import (  # noqa: F401
@@ -38,5 +39,9 @@ from openmldb_spark.operators.table_io import (  # noqa: F401
 from openmldb_spark.ddl import (  # noqa: F401
     DDLError, TableDef, parse_create_table, ttl_filter)
 from openmldb_spark.jobs import CheckpointedJob  # noqa: F401
+
+# A Python worker imports the engine when it unpickles its first kernel;
+# from then on its tasks stop re-reading unchanged zip archives.
+install_on_worker()
 
 __version__ = "0.2.0"

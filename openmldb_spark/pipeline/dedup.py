@@ -115,12 +115,16 @@ def line_dedup(df: DataFrame, text_col: str = "text",
                        F.sort_array(F.collect_list(
                            F.struct("__pos", "__line"))),
                        lambda s: s["__line"])).alias("__clean")))
+    # the original text only says whether the output is NULL: it is
+    # projected to a flag before the join, so it never reaches it
     out_cols = [F.col(c) if c != text_col else
-                F.when(F.col(text_col).isNull(), F.lit(None))
+                F.when(F.col("__null"), F.lit(None))
                 .otherwise(F.coalesce(F.col("__clean"), F.lit("")))
                 .alias(text_col)
                 for c in df.columns]
-    return df.join(rebuilt, id_col, "left").select(*out_cols)
+    flagged = df.select(*[c for c in df.columns if c != text_col],
+                        F.col(text_col).isNull().alias("__null"))
+    return flagged.join(rebuilt, id_col, "left").select(*out_cols)
 
 
 def _splitmix_vec(x: np.ndarray) -> np.ndarray:
@@ -182,7 +186,6 @@ def _batch_window_hashes(texts: pd.Series, k: int):
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", num_hashes: int = 64,
                        shingle: int = 5, seed: int = 42,
-                       fan_out: bool = True,
                        bands: int | None = None) -> DataFrame:
     """MinHash signature per document as ``array<bigint>[num_hashes]``.
 
@@ -209,10 +212,16 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     Python in the hot loop; ~20 numpy calls per *batch*, not per doc
     (the per-doc version measured ~0.3 ms/doc of numpy call overhead).
 
-    ``fan_out``: when the input has fewer partitions than
-    ``defaultParallelism`` (e.g. one small parquet file), repartition up
-    so the kernel uses every core. Gated so it is a no-op at real scale,
-    where the scan already has >> cores partitions — no extra shuffle.
+    Fan-out is decided from the input's physical plan; building the
+    result runs nothing. An input whose plan has no Exchange (a bare
+    scan, e.g. one small parquet file) has its partitions counted, and
+    fewer than ``defaultParallelism`` are round-robin repartitioned up
+    so the kernel uses every core; at real scale the scan already has
+    >> cores splits and nothing is added. An input with an Exchange
+    keeps the partitioning its last shuffle gives it, sized at run time
+    by AQE: counting its partitions here would run every upstream
+    shuffle stage while the lazy pipeline is being built, and again
+    when it runs.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -268,10 +277,10 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                    for i in range(n_docs)]
         return pd.Series(out)
 
-    if fan_out:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target)
+    target = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" not in plan and df.rdd.getNumPartitions() < target:
+        df = df.repartition(target)
     sel = df.select(F.col(id_col), mh(F.col(text_col)).alias("__mh"))
     if not bands:
         return sel.select(F.col(id_col), F.col("__mh").alias("minhash"))

@@ -51,10 +51,14 @@ def _apply_aggs(aggs, g, fr, i, row, buf_js=None):
             row[name] = g[col].iloc[fr[-1]] if fr else None
         elif fn == "lag":
             # lag(n) = n-th newest BUFFERED row (union rows included,
-            # EXCLUDE CURRENT_TIME / INSTANCE_NOT_IN_WINDOW applied)
-            k = extra or 1
+            # EXCLUDE CURRENT_TIME / INSTANCE_NOT_IN_WINDOW applied);
+            # lag(0) = the current row (test_udaf_function.yaml#46/#59)
+            k = 1 if extra is None else extra
             js = buf_js if buf_js is not None else list(range(i))
-            row[name] = g[col].iloc[js[-k]] if len(js) >= k else None
+            if k == 0:
+                row[name] = g[col].iloc[i]
+            else:
+                row[name] = g[col].iloc[js[-k]] if len(js) >= k else None
         elif fn in ("sum_where", "count_where", "avg_where",
                     "min_where", "max_where"):
             sel = [g[col].iloc[j] for j in fr if extra(g.iloc[j])]

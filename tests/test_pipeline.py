@@ -1151,7 +1151,7 @@ def test_tokenization_whitespace_convention(spark):
         append_lang_quality, quality_score, token_count)
 
     docs = [(1, "\ttab\tthe is of a\n"), (2, "\n\n x \t"),
-            (3, " spaces only "), (4, "")]
+            (3, " spaces only "), (4, ""), (5, None)]
     df = spark.createDataFrame(docs, "doc_id int, text string")
     col = {r["doc_id"]: r for r in df.select(
         "doc_id", token_count("text").alias("nt"),
@@ -1171,7 +1171,11 @@ def test_tokenization_whitespace_convention(spark):
                  pd.DataFrame(docs, columns=["doc_id", "text"]))
     lang_sql, qs_sql = entrymod._lang_qs_sql()
     odf = con.execute(
-        f"SELECT doc_id, {qs_sql} AS q FROM documents").fetchdf()
+        f"SELECT doc_id, {lang_sql} AS lang, {qs_sql} AS q "
+        f"FROM documents").fetchdf()
+    assert len(odf) == len(docs)
     for _, r in odf.iterrows():
-        assert abs(r["q"] - round(col[int(r["doc_id"])]["q"] + 1e-6, 4)) \
-            < 1e-4, r["doc_id"]
+        i = int(r["doc_id"])
+        assert abs(r["q"] - round(col[i]["q"] + 1e-6, 4)) < 1e-4, i
+        # NULL text scores and guesses like '' (the kernel fillna("")s)
+        assert r["lang"] == ker[i]["lang_guess"], i

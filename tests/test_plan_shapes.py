@@ -242,3 +242,57 @@ def test_pack_chunks_adds_no_exchange(spark):
     # the detail section -> exactly one MapInPandas = two mentions
     assert p.count("MapInPandas") == 2, p      # the offsets kernel only
     assert "Generate" in p, p                  # the explode is there
+
+
+def test_minhash_build_starts_no_job(spark):
+    # Fan-out is read from the plan: building over an input that ends in
+    # a shuffle executes nothing (counting its partitions would run every
+    # upstream shuffle stage during the build); a bare one-partition scan
+    # still fans out to every core.
+    from openmldb_spark.pipeline.dedup import (
+        line_dedup, minhash_lsh_pairs, minhash_signatures)
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    assert docs.rdd.getNumPartitions() == 1
+    shuffled = line_dedup(docs)
+    assert "Exchange" in plan_of(shuffled)
+    group = "test_minhash_build_starts_no_job"
+    sc.setJobGroup(group, "build only")
+    try:
+        out = minhash_lsh_pairs(shuffled, num_hashes=16, bands=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    try:
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert "RoundRobinPartitioning" not in plan_of(out)
+    finally:
+        spark.catalog.clearCache()
+    p = plan_of(minhash_signatures(docs))
+    assert (f"RoundRobinPartitioning({sc.defaultParallelism})" in p), p
+
+
+def _logical_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _logical_nodes(children.apply(i))
+
+
+def test_line_dedup_text_stays_out_of_rebuild_join(spark):
+    # the original text only decides whether the output is NULL: it is
+    # projected to a flag before the rebuild join, so no join input
+    # carries it
+    from openmldb_spark.pipeline.dedup import line_dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = line_dedup(docs)
+    plan = out._jdf.queryExecution().optimizedPlan()
+    joins = [n for n in _logical_nodes(plan) if n.nodeName() == "Join"]
+    assert len(joins) == 2, plan.toString()      # anti join + rebuild
+    for j in joins:
+        for side in (j.left(), j.right()):
+            names = [side.output().apply(i).name()
+                     for i in range(side.output().size())]
+            assert "text" not in names, (names, plan.toString())
+    assert out.columns == docs.columns

@@ -114,7 +114,7 @@ def case(draw):
     if spec.instance_not_in_window and not has_union:
         spec = WindowSpecFE(**{**spec.__dict__,
                                "instance_not_in_window": False})
-    lag_n = draw(st.integers(1, 9))
+    lag_n = draw(st.integers(0, 9))
     return groups, vals, flags, sides, spec, has_union, lag_n
 
 

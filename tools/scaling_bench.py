@@ -19,6 +19,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 sys.path.insert(0, "/root/repo")
 
@@ -82,11 +83,15 @@ def main():
 
     path = prepare_input(args.replicas)
     lo, hi = args.levels
+    # names this invocation in the merged artifact, so every merged
+    # wall_s says which run it came from
+    run_id = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
     def best(cpus):
         runs = [run_level(cpus, path) for _ in range(args.repeat)]
         b = min(runs, key=lambda r: r["wall_s"])
         b["samples_wall_s"] = [r["wall_s"] for r in runs]
+        b["run"] = run_id
         return b
 
     r_lo = best(lo)
@@ -103,22 +108,30 @@ def main():
         "meets_target": eff >= 0.8,
     }
     print(json.dumps(result, indent=1))
-    # MERGE into the committed artifact rather than overwrite: the file
-    # accumulates both measured pairs (headline 2->8, secondary 8->32),
-    # so re-running one pair must not erase the other. Per-level sample
-    # lists are appended (the min updates if this run beat it); the
-    # pair-level numbers for THIS run replace the same pair's previous
-    # entry. Narrative keys written by hand (methodology, notes) are
-    # preserved.
     out_path = "/root/repo/BENCH_SCALING.json"
     try:
         with open(out_path) as f:
             merged = json.load(f)
     except (OSError, json.JSONDecodeError):
         merged = {}
+    merge_result(merged, result, lo, hi)
+    with open(out_path, "w") as f:
+        json.dump(merged, f, indent=1)
+
+
+def merge_result(merged: dict, result: dict, lo: int, hi: int) -> dict:
+    """MERGE one run's ``result`` into the committed artifact rather
+    than overwrite it: the file accumulates both measured pairs
+    (headline 2->8, secondary 8->32), so re-running one pair must not
+    erase the other. Per-level sample lists are appended (the min
+    updates if this run beat it, and ``run`` names the run the kept
+    ``wall_s`` came from); the pair-level numbers for THIS run replace
+    the same pair's previous entry. Narrative keys written by hand
+    (methodology, notes) are preserved."""
     merged["input_rows"] = result["input_rows"]
-    for lvl, r in ((lo, r_lo), (hi, r_hi)):
+    for lvl in (lo, hi):
         key = f"local[{lvl}]"
+        r = result[key]
         prev = merged.get(key, {})
         samples = list(prev.get("samples_wall_s", [])) + r["samples_wall_s"]
         entry = dict(r)
@@ -126,6 +139,8 @@ def main():
         if prev.get("wall_s") is not None and prev["wall_s"] < r["wall_s"]:
             entry["wall_s"] = prev["wall_s"]
             entry["rows_per_s"] = prev.get("rows_per_s", entry["rows_per_s"])
+            # an entry merged before runs were named has no provenance
+            entry["run"] = prev.get("run")
         if "note" in prev:          # hand-written provenance survives
             entry["note"] = prev["note"]
         merged[key] = entry
@@ -133,10 +148,10 @@ def main():
     # this run's walls — otherwise the stored speedup could contradict
     # the wall_s values sitting beside it (min-merge keeps the
     # historical best per level, so the ratio must use the same pair
-    # of numbers it is published next to).
-    m_lo = merged[f"local[{lo}]"]["wall_s"]
-    m_hi = merged[f"local[{hi}]"]["wall_s"]
-    m_speedup = round(m_lo / m_hi, 3)
+    # of numbers it is published next to, and names their runs).
+    m_lo = merged[f"local[{lo}]"]
+    m_hi = merged[f"local[{hi}]"]
+    m_speedup = round(m_lo["wall_s"] / m_hi["wall_s"], 3)
     m_eff = round(m_speedup / (hi / lo), 3)
     pair_prev = merged.get(f"pair_{lo}_{hi}", {})
     merged[f"pair_{lo}_{hi}"] = {
@@ -144,6 +159,8 @@ def main():
         "scaling_efficiency": m_eff,
         "target": 0.8,
         "meets_target": m_eff >= 0.8,
+        "wall_s_runs": {f"local[{lo}]": m_lo.get("run"),
+                        f"local[{hi}]": m_hi.get("run")},
         # hand-written provenance survives re-runs, like per-level notes
         **({"note": pair_prev["note"]} if "note" in pair_prev else {}),
     }
@@ -151,8 +168,7 @@ def main():
         # headline pair (see BENCH/BASELINE.md §3) — keep the top-level
         # north-rule keys in sync with the merged measurement
         merged.update(merged[f"pair_{lo}_{hi}"])
-    with open(out_path, "w") as f:
-        json.dump(merged, f, indent=1)
+    return merged
 
 
 if __name__ == "__main__":
