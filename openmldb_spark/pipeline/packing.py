@@ -113,8 +113,11 @@ def pack_offsets(df: DataFrame, id_col: str = "doc_id",
                 "chunk_first": first, "chunk_last": last,
             })
 
+    # the chunk size rides on chunk_first's metadata, so pack_chunks can
+    # check a reused offsets frame from its schema without running a job
     return (d.withColumn("__pid", pid)
-            .mapInPandas(batches, schema))
+            .mapInPandas(batches, schema)
+            .withMetadata("chunk_first", {"chunk_tokens": c}))
 
 
 def pack_chunks(df: DataFrame, id_col: str = "doc_id",
@@ -142,10 +145,19 @@ def pack_chunks(df: DataFrame, id_col: str = "doc_id",
 
     Pass ``offsets`` (a prior :func:`pack_offsets` result for the SAME
     df/chunk_tokens) to reuse its range shuffle + totals collect
-    instead of recomputing the prefix sum."""
+    instead of recomputing the prefix sum; offsets built with another
+    ``chunk_tokens`` (or not by pack_offsets) raise ``ValueError``."""
     c = chunk_tokens
-    off = offsets if offsets is not None else pack_offsets(
-        df, id_col, text_col, c, num_partitions, tokenizer_fn)
+    if offsets is None:
+        off = pack_offsets(df, id_col, text_col, c, num_partitions,
+                           tokenizer_fn)
+    else:
+        built = offsets.schema["chunk_first"].metadata.get("chunk_tokens")
+        if built != c:
+            raise ValueError(
+                f"offsets were built with chunk_tokens={built}, "
+                f"not {c}: pass offsets from pack_offsets(chunk_tokens={c})")
+        off = offsets
     ch = F.col("chunk_id")
     start = F.col("tok_start")
     end = start + F.col("n_tokens")

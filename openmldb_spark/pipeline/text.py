@@ -1,28 +1,32 @@
 """Text analysis for training-data curation.
 
 Language-ID (stopword/charset heuristic), quality scoring, token counting
-(whitespace + BPE-ish word-piece regex), and document fingerprinting
-(shingle rolling-hash min — Rabin-Karp style winnowing reduced to a
-min-hash). Two execution paths:
+(whitespace + BPE-ish word-piece regex), the Gopher repetition signals
+and quality rules, and document fingerprinting (shingle rolling-hash
+min). Two execution paths:
 
-- individual feature builders are Catalyst Column expressions (cheap
-  per-row counts stay JVM-side, codegen'd, column-pruned);
-- ``text_features`` defaults to ONE Arrow ``mapInPandas`` kernel for the
-  full set — the token/fingerprint features are higher-order array
-  functions that Spark evaluates interpreted with re-inlined inputs, so
-  the batch kernel is the fast path for whole-corpus featurization
-  (see ``text_features`` docstring for the measurement).
+- individual feature builders are Catalyst Column expressions, for spot
+  use: the token features are higher-order array functions that Spark
+  evaluates interpreted, with the split re-inlined per element;
+- the corpus path is Arrow ``mapInPandas`` kernels (``text_features``,
+  ``append_lang_quality``, ``append_repetition``, ``gopher_quality``
+  with all eight rules), each one pass per batch over the shared ``_WS``
+  whitespace class and ``_token_stats_batch`` counts.
 """
 
 from __future__ import annotations
 
 import re
+import string
+from collections import Counter
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # tiny per-language stopword seeds for the n-gram/stopword heuristic
 _LANG_MARKERS = {
@@ -36,16 +40,21 @@ _EN_STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is",
                  "it", "that", "for", "on", "with", "as"]
 
 
+# Java regex's \s, which the Catalyst path splits and trims on. Python's
+# str.split()/strip() would also split on \x1c-\x1f and Unicode spaces.
+_WS = " \t\n\x0b\x0c\r"
+_RE_TOKEN = re.compile(f"[^{_WS}]+")
+
+
 def _wtrim(c: Column | str) -> Column:
     """Whitespace-aware trim (ASCII \\s, both ends). F.trim strips
-    SPACES only, while the Arrow kernels tokenize with Python
-    str.strip()/str.split() (any whitespace) — a doc edged with a tab
-    or newline would otherwise grow a leading empty token on the
-    Catalyst path but not the kernel path. Every tokenizing and
-    line-trimming path goes through this so Catalyst, the kernels, and
-    the DuckDB driver oracles share ONE convention. (Non-ASCII Unicode
-    whitespace is out of contract: \\s is ASCII in both Java regex and
-    RE2, and the corpora are ASCII.)"""
+    SPACES only, while the Arrow kernels tokenize on the same ``_WS``
+    class — a doc edged with a tab or newline would otherwise grow a
+    leading empty token on the Catalyst path but not the kernel path.
+    Every tokenizing and line-trimming path goes through this (or
+    ``_WS``) so Catalyst, the kernels, and the DuckDB oracles
+    share ONE convention. (RE2's \\s, in the oracles, lacks \\x0b; and
+    non-ASCII Unicode whitespace is out of contract.)"""
     c = F.col(c) if isinstance(c, str) else c
     return F.regexp_replace(c, r"^\s+|\s+$", "")
 
@@ -209,18 +218,28 @@ def top2gram_frac(text: Column) -> Column:
             .otherwise(F.lit(0.0))
 
 
-def _rep_signals(s: str) -> tuple[float, float]:
+def _lines(s: str) -> list[str]:
+    """Non-empty lines, each trimmed of ``_WS`` (the ``_wtrim`` twin)."""
+    return [ln for ln in (x.strip(_WS) for x in s.split("\n")) if ln]
+
+
+def _rep_signals(lines: list[str], ws: list[str]) -> tuple[float, float]:
     """Per-doc repetition signals (kernel twin of ``dup_line_frac`` /
-    ``top2gram_frac``): one pass, dict counter — O(tokens)."""
-    lines = [ln for ln in (x.strip() for x in s.split("\n")) if ln]
+    ``top2gram_frac``) from a doc's ``_lines`` and lowercased tokens:
+    one pass, bigram Counter — O(tokens)."""
     dlf = (1.0 - len(set(lines)) / len(lines)) if lines else 0.0
-    ws = s.lower().split()
     if len(ws) < 2:
         return dlf, 0.0
-    counts: dict[tuple[str, str], int] = {}
-    for bg in zip(ws, ws[1:]):
-        counts[bg] = counts.get(bg, 0) + 1
-    return dlf, max(counts.values()) / (len(ws) - 1)
+    return dlf, max(Counter(zip(ws, ws[1:])).values()) / (len(ws) - 1)
+
+
+_REP_COLS = ["dup_line_frac", "top2gram_frac"]
+
+
+def _repetition(lines: pd.Series, low: pd.Series) -> np.ndarray:
+    """A batch's ``_REP_COLS`` as an (n, 2) array."""
+    return np.array([_rep_signals(ls, ws) for ls, ws in zip(lines, low)],
+                    dtype=np.float64).reshape(-1, 2)
 
 
 def append_repetition(df: DataFrame, text_col: str = "text",
@@ -232,56 +251,53 @@ def append_repetition(df: DataFrame, text_col: str = "text",
     CodegenFallback), which measured ~10x slower on 5k short docs and
     grows superlinearly with doc length; the kernel is O(tokens) per
     doc and shuffles nothing."""
-    from typing import Iterator
-
-    from pyspark.sql import types as T
-
     out_schema = T.StructType(
         list(df.schema.fields)
-        + [T.StructField(prefix + "dup_line_frac", T.DoubleType()),
-           T.StructField(prefix + "top2gram_frac", T.DoubleType())])
+        + [T.StructField(prefix + c, T.DoubleType()) for c in _REP_COLS])
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             res = pdf.copy()
-            reps = pdf[text_col].fillna("").map(_rep_signals)
-            res[prefix + "dup_line_frac"] = reps.map(
-                lambda p: p[0]).astype("float64")
-            res[prefix + "top2gram_frac"] = reps.map(
-                lambda p: p[1]).astype("float64")
+            txt = pdf[text_col].fillna("")
+            res[[prefix + c for c in _REP_COLS]] = _repetition(
+                txt.map(_lines), txt.str.lower().str.findall(_RE_TOKEN))
             yield res
 
     return df.mapInPandas(batches, out_schema)
 
 
-_RE_ALPHA = re.compile(r"[A-Za-z]")
+_DEL_ALPHA = str.maketrans("", "", string.ascii_letters)  # [A-Za-z]
 _RE_DIGIT = re.compile(r"[0-9]")
 _RE_PUNCT = re.compile(r"[.,!?;:'\"()\[\]{}-]")
-_RE_SPACE = re.compile(r"\s")
+_RE_SPACE = re.compile(f"[{_WS}]")
 _RE_NONASCII = re.compile(r"[^\x00-\x7F]")
 _SW_SET = frozenset(_EN_STOPWORDS)
+
+
+def _ratio(num, den) -> np.ndarray:
+    return np.where(den > 0, num / np.clip(den, 1, None), 0.0)
 
 
 def _token_stats_batch(txt: pd.Series) -> dict:
     """Shared per-batch tokenization + char-class stats for the Arrow
     kernels — ONE source for the counting conventions (compiled regex
-    classes, str.strip/split tokenization, stopword set), so
-    _text_features_kernel and append_lang_quality cannot drift on the
-    intermediate stats feeding _lang_guess_batch/_quality_score_batch."""
-    toks = txt.str.strip().str.split()
-    low = txt.str.lower().str.strip().str.split()
-    ntok = toks.map(len).to_numpy(dtype=np.int64)
+    classes, ``_RE_TOKEN`` tokenization, stopword set), so the kernels
+    cannot drift on the intermediate stats feeding
+    _lang_guess_batch/_quality_score_batch/gopher_quality."""
+    # lower() maps no character to or from _WS: same tokens, lowercased
+    low = txt.str.lower().str.findall(_RE_TOKEN)
+    ntok = low.map(len).to_numpy(dtype=np.int64)
     hits = low.map(lambda ws: sum(w in _SW_SET for w in ws)) \
               .to_numpy(dtype=np.int64)
     return {
         "n": txt.str.len().to_numpy(dtype=np.float64),
-        "toks": toks, "low": low, "ntok": ntok, "hits": hits,
-        "n_alpha": txt.map(
-            lambda s: len(_RE_ALPHA.findall(s))).to_numpy(np.float64),
+        "low": low, "ntok": ntok, "hits": hits,
+        "n_alpha": txt.map(lambda s: len(s) - len(s.translate(_DEL_ALPHA)))
+                      .to_numpy(np.float64),
         "n_punct": txt.map(
             lambda s: len(_RE_PUNCT.findall(s))).to_numpy(np.float64),
         "n_na": txt.map(lambda s: len(_RE_NONASCII.findall(s))),
-        "swr": np.where(ntok > 0, hits / np.clip(ntok, 1, None), 0.0),
+        "swr": _ratio(hits, ntok),
     }
 
 
@@ -319,10 +335,9 @@ def _quality_score_batch(n, ntok, n_alpha, n_punct, swr) -> np.ndarray:
     n_punct = np.asarray(n_punct, dtype=np.float64)
     swr = np.asarray(swr, dtype=np.float64)
     len_score = np.minimum(n / 500.0, 1.0)
-    awl = np.where(ntok > 0, n_alpha / np.clip(ntok, 1, None), 0.0)
+    awl = _ratio(n_alpha, ntok)
     awl_score = np.where((awl >= 3) & (awl <= 10), 1.0, 0.5)
-    pr = np.where(n > 0, n_punct / np.clip(n, 1, None), 0.0)
-    punct_score = np.where(pr < 0.1, 1.0, 0.5)
+    punct_score = np.where(_ratio(n_punct, n) < 0.1, 1.0, 0.5)
     sw_score = np.minimum(swr * 5.0, 1.0)
     return (len_score + awl_score + punct_score + sw_score) / 4.0
 
@@ -346,13 +361,7 @@ def append_lang_quality(df: DataFrame, text_col: str = "text",
     ``top2gram_frac`` (the ``append_repetition`` signals) from the SAME
     pass, so a caller needing all four pays one Arrow round-trip of the
     text column instead of two chained kernels."""
-    import re
-    from typing import Iterator
-
-    from pyspark.sql import types as T
-
-    extra = ([T.StructField(prefix + "dup_line_frac", T.DoubleType()),
-              T.StructField(prefix + "top2gram_frac", T.DoubleType())]
+    extra = ([T.StructField(prefix + c, T.DoubleType()) for c in _REP_COLS]
              if with_repetition else [])
     out_schema = T.StructType(
         list(df.schema.fields) + extra
@@ -363,13 +372,10 @@ def append_lang_quality(df: DataFrame, text_col: str = "text",
         for pdf in it:
             res = pdf.copy()
             txt = pdf[text_col].fillna("")
-            if with_repetition:
-                reps = txt.map(_rep_signals)
-                res[prefix + "dup_line_frac"] = reps.map(
-                    lambda p: p[0]).astype("float64")
-                res[prefix + "top2gram_frac"] = reps.map(
-                    lambda p: p[1]).astype("float64")
             st = _token_stats_batch(txt)
+            if with_repetition:
+                res[[prefix + c for c in _REP_COLS]] = _repetition(
+                    txt.map(_lines), st["low"])
             res[prefix + "lang_guess"] = _lang_guess_batch(
                 st["n_na"], st["low"], txt.str.len())
             res[prefix + "quality_score"] = _quality_score_batch(
@@ -453,70 +459,55 @@ def gopher_quality(df: DataFrame, text_col: str = "text",
     Rules: token count in [min,max]; mean word length in [min,max];
     symbol-to-word ratio (``#`` / ``...``) over threshold; fraction of
     non-empty lines starting with a bullet; minimum stopword hits; and
-    the repetition signals (dup_line_frac / top2gram_frac), computed by
-    the Arrow kernel (``append_repetition``) — everything else is
-    codegen'd Catalyst. NULL text fails min_tokens (kept out), same as
-    an empty doc."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = _tokens(t)
-    ntok = F.size(toks)
-    cc = char_class_counts(t)
-    avg_wl = F.when(ntok > 0,
-                    cc["n_alpha"].cast("double") / ntok.cast("double")) \
-              .otherwise(F.lit(0.0))
-    n_sym = (F.length(t) - F.length(F.regexp_replace(t, r"#", ""))) \
-        + F.size(F.split(t, r"\.\.\.")) - 1
-    sym_ratio = F.when(ntok > 0,
-                       n_sym.cast("double") / ntok.cast("double")) \
-                 .otherwise(F.lit(0.0))
-    lines = F.filter(F.transform(F.split(t, "\n"),
-                                 lambda l: _wtrim(l)),
-                     lambda l: l != F.lit(""))
-    n_lines = F.size(lines)
-    bullet_frac = F.when(
-        n_lines > 0,
-        F.size(F.filter(lines, lambda l:
-                        l.startswith("-") | l.startswith("*")
-                        | l.startswith("•"))).cast("double")
-        / n_lines.cast("double")).otherwise(F.lit(0.0))
-    low = _tokens(F.lower(t))
-    sw_hits = F.size(F.filter(low,
-                              lambda w: w.isin(list(_EN_STOPWORDS))))
-
-    rep = append_repetition(df, text_col, prefix="__gq_")
-    rules = [
-        ("too_few_tokens", ntok < F.lit(min_tokens)),
-        ("too_many_tokens", ntok > F.lit(max_tokens)),
-        ("avg_word_len", (avg_wl < F.lit(min_avg_word_len))
-         | (avg_wl > F.lit(max_avg_word_len))),
-        ("symbol_ratio", sym_ratio > F.lit(max_symbol_word_ratio)),
-        ("bullet_lines", bullet_frac > F.lit(max_bullet_line_frac)),
-        ("few_stopwords", sw_hits < F.lit(min_stopword_hits)),
-        ("dup_lines", F.col("__gq_dup_line_frac")
-         > F.lit(max_dup_line_frac)),
-        ("repeated_2grams", F.col("__gq_top2gram_frac")
-         > F.lit(max_top2gram_frac)),
-    ]
-    reasons = F.filter(
-        F.array(*[F.when(cond, F.lit(name)).otherwise(F.lit(None))
-                  for name, cond in rules]),
-        lambda x: x.isNotNull())
-    out = rep.withColumn("__gq_reasons", reasons) \
-             .withColumn(out_col, F.size("__gq_reasons") == 0)
+    the repetition signals (dup_line_frac / top2gram_frac). All eight
+    are ONE Arrow ``mapInPandas`` pass that tokenizes each doc once
+    (``_token_stats_batch`` + ``_rep_signals``, the same conventions as
+    the other text kernels): as Catalyst, most rules are higher-order
+    lambdas over ``split``, which Spark evaluates interpreted. NULL
+    text fails min_tokens (kept out), same as an empty doc."""
+    names = ["too_few_tokens", "too_many_tokens", "avg_word_len",
+             "symbol_ratio", "bullet_lines", "few_stopwords", "dup_lines",
+             "repeated_2grams"]
+    # withColumn semantics: an output name already in df is replaced
+    new = {out_col: T.StructField(out_col, T.BooleanType(), False)}
     if reasons_col is not None:
-        out = out.withColumn(reasons_col, F.col("__gq_reasons"))
-    return out.drop("__gq_reasons", "__gq_dup_line_frac",
-                    "__gq_top2gram_frac")
+        new[reasons_col] = T.StructField(
+            reasons_col, T.ArrayType(T.StringType()), False)
+    fields = [new.pop(f.name, f) for f in df.schema.fields]
+    out_schema = T.StructType(fields + list(new.values()))
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            res = pdf.copy()
+            txt = pdf[text_col].fillna("")
+            st = _token_stats_batch(txt)
+            ntok = st["ntok"]
+            avg_wl = _ratio(st["n_alpha"], ntok)
+            # '...' counted non-overlapping, as size(split(t, '\.\.\.')) - 1
+            n_sym = txt.map(lambda s: s.count("#") + s.count("..."))
+            lines = txt.map(_lines)
+            bullets = lines.map(
+                lambda ls: sum(ln.startswith(("-", "*", "•")) for ln in ls))
+            dlf, t2g = _repetition(lines, st["low"]).T
+            fails = np.column_stack([
+                ntok < min_tokens, ntok > max_tokens,
+                (avg_wl < min_avg_word_len) | (avg_wl > max_avg_word_len),
+                _ratio(n_sym, ntok) > max_symbol_word_ratio,
+                _ratio(bullets, lines.map(len)) > max_bullet_line_frac,
+                st["hits"] < min_stopword_hits,
+                dlf > max_dup_line_frac, t2g > max_top2gram_frac])
+            res[out_col] = ~fails.any(axis=1)
+            if reasons_col is not None:
+                res[reasons_col] = [[n for n, f in zip(names, row) if f]
+                                    for row in fails]
+            yield res
+
+    return df.mapInPandas(batches, out_schema)
 
 
 def _text_features_kernel(df: DataFrame, text_col: str,
                           prefix: str) -> DataFrame:
     """Arrow kernel twin of the expression path — same outputs."""
-    import re
-    from typing import Iterator
-
-    from pyspark.sql import types as T
-
     feat_names = ["n_chars", "n_tokens", "n_wordpieces", "n_alpha",
                   "n_digit", "n_punct", "n_space", "n_nonascii",
                   "stopword_ratio", "lang_guess", "quality_score",
@@ -554,7 +545,7 @@ def _text_features_kernel(df: DataFrame, text_col: str,
             st = _token_stats_batch(txt)
             res[prefix + "n_chars"] = txt.str.len().astype("int64")
             res[prefix + "n_tokens"] = st["ntok"]
-            res[prefix + "n_wordpieces"] = st["toks"].map(
+            res[prefix + "n_wordpieces"] = txt.str.findall(_RE_TOKEN).map(
                 lambda ws: sum(max(1, -(-len(w) // 4)) for w in ws)
             ).astype("int64")
             res[prefix + "n_alpha"] = st["n_alpha"].astype(np.int64)
@@ -579,11 +570,8 @@ def _text_features_kernel(df: DataFrame, text_col: str,
                 return xxh(s)
 
             res[prefix + "fingerprint"] = txt.map(fp).astype("int64")
-            reps = txt.map(_rep_signals)
-            res[prefix + "dup_line_frac"] = reps.map(
-                lambda p: p[0]).astype("float64")
-            res[prefix + "top2gram_frac"] = reps.map(
-                lambda p: p[1]).astype("float64")
+            res[[prefix + c for c in _REP_COLS]] = _repetition(
+                txt.map(_lines), st["low"])
             yield res
 
     return df.mapInPandas(batches, out_schema)

@@ -7,10 +7,7 @@ one out of the gate. These tests pin that invariant plus the pairwise
 queries()/oracle_sql() contract the driver's comparator relies on.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
+# conftest.py puts the checkout root on sys.path
 import __spark_entry__ as entrymod
 
 

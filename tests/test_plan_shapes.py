@@ -296,3 +296,20 @@ def test_line_dedup_text_stays_out_of_rebuild_join(spark):
                      for i in range(side.output().size())]
             assert "text" not in names, (names, plan.toString())
     assert out.columns == docs.columns
+
+
+def test_gopher_quality_is_scan_plus_one_arrow_pass(spark):
+    # all eight rules run in one mapInPandas over the scan: no shuffle,
+    # and no higher-order lambda (interpreted CodegenFallback) anywhere
+    import __spark_entry__ as entrymod
+    from openmldb_spark.pipeline.text import gopher_quality
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for df in (gopher_quality(docs),
+               entrymod.q_gopher_quality(spark, SF)):
+        p = plan_of(df)
+        assert "Exchange" not in p, p
+        assert p.count("MapInPandas") == 2, p     # tree + detail entry
+        assert p.count("Scan parquet") == 2, p
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in opt.lower(), opt

@@ -4,8 +4,9 @@ counts per file — calibration tool for test_reference_cases.FILES.
 Usage: python tools/golden_report.py [file ...]   (paths rel. to cases/)
 """
 import os, sys, yaml
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
 
 from openmldb_spark.session import get_spark

@@ -21,7 +21,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SCALE_INPUT = "/tmp/openmldb_spark_scale_input"
 
@@ -59,7 +60,7 @@ def run_level(cpus: int, input_path: str) -> dict:
     # is meaningless.
     p = subprocess.run(
         ["taskset", "-c", f"0-{cpus - 1}",
-         sys.executable, "/root/repo/tools/scaling_run.py",
+         sys.executable, os.path.join(ROOT, "tools", "scaling_run.py"),
          "--cpus", str(cpus), "--input", input_path],
         capture_output=True, text=True, env=env, timeout=3600)
     for line in reversed(p.stdout.strip().splitlines()):
@@ -108,7 +109,7 @@ def main():
         "meets_target": eff >= 0.8,
     }
     print(json.dumps(result, indent=1))
-    out_path = "/root/repo/BENCH_SCALING.json"
+    out_path = os.path.join(ROOT, "BENCH_SCALING.json")
     try:
         with open(out_path) as f:
             merged = json.load(f)
